@@ -11,31 +11,32 @@ or Structured Streaming ``foreachBatch``). Dataflow per batch:
    (union-by-name, int→long/float→double widening) *before* apply
    (SURVEY.md §4.3 item 5).
 3. **LWW dedup** — one winner per ``(conv_id, turn_idx)`` by
-   ``(ts, offset, partition)``. Default on dense-manifest logs: the
-   ``locator`` kernel (packed-stamp HashAggregate + exact bitmap fetch — no
-   sort, no wide shuffle; :func:`_locator_winners`). Fallbacks: skew-proof
-   ``max_by`` partial aggregation (reference precedent:
-   latest-record-per-key, ``feature_engineering.py:238-240``) and the
-   bucket-fused single-shuffle variant (``dedup_mode='bucket'``).
+   ``(ts, offset, partition)``. The kernel follows from the input contract,
+   not from an option: a batch with dense manifest ranges inside the packed
+   stamp's bit budget and ``locator_driver_budget`` runs the ``locator``
+   kernel (packed-stamp HashAggregate + exact bitmap fetch — no sort, no
+   wide shuffle; :func:`_locator_winners`); every other batch runs the
+   skew-proof ``max_by`` partial aggregation (``lww_reduce``; reference
+   precedent: latest-record-per-key, ``feature_engineering.py:238-240``).
 4. **Commit** — winners land as merge-on-read delta files (O(batch) IO),
    snapshot tagged with the updated applied-offset map; lineage rows
    (batch × source partition × offset range) and a throughput metrics row are
    appended.
 
-Offset-range bookkeeping, cheapest first:
+Offset-range bookkeeping rides data the batch already brings to the driver,
+and is verified before anything is staged, on every Spark version:
 
-- ``manifest_ranges`` — the log's manifest declares DENSE per-partition offset
-  ranges (the WAL contract: offsets are a gapless per-partition sequence), so
-  the applied ranges are pure window arithmetic: ZERO runtime aggregation,
-  no extra Spark action, and a fully-stale batch skips without any scan.
-  The manifest is verified, not blindly trusted: two Observation counters
-  ride the batch's first job and any row outside the declared ranges — or a
-  count short of what the manifest claims — aborts before commit
-  (``validate_manifest``; measured cost: a few percent).
-- ``source_partitions`` — the universe of partition ids is known but ranges
-  are not: per-partition (count, min, max) ride the write job as
-  ``Observation`` metrics — one Spark action per batch.
-- neither — a fallback ≤P-row aggregate runs first.
+- ``locator`` batches — the manifest declares DENSE per-partition offset
+  ranges (the WAL contract: offsets are a gapless per-partition sequence),
+  so the applied ranges are pure window arithmetic and a fully-stale batch
+  skips without any scan. The locator aggregation carries two counters
+  (rows per key, rows outside the declared ranges) that the driver sums from
+  the winner locators it collects anyway; any row outside the ranges, or a
+  row count short of what the manifest claims, aborts the batch.
+- every other batch — one ≤P-row ``groupBy(partition)`` aggregate yields
+  the per-partition (count, min, max). It is the applied range when nothing
+  is declared, and it is checked against the declared manifest ranges and
+  the ``source_partitions`` universe when those are given.
 
 Either way the driver never sees data rows (contrast: the reference collects
 key lists to the driver, ``ml_readmission_risk.ipynb`` cells 14/21/31,
@@ -52,9 +53,9 @@ from pyspark.sql import functions as F
 
 from mimic_iv_etl_spark.cdc.metrics import append_lineage, append_metrics
 from mimic_iv_etl_spark.cdc.profiling import phase
+from mimic_iv_etl_spark.cdc.profiling import record as _record
 from mimic_iv_etl_spark.lake.merge import (PACK_MAX_OFFSET, PACK_MAX_PARTITION,
-                                           lww_bucket_fused, lww_reduce,
-                                           lww_winner_locators)
+                                           lww_reduce, lww_winner_locators)
 from mimic_iv_etl_spark.lake.schema import merge_schemas, schemas_equal
 from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable
 
@@ -64,28 +65,9 @@ META_COLS = ("op", "offset", "partition", "payload")
 # a win over a broadcast-join filter (expression size, codegen limits)
 _HWM_PREDICATE_CAP = 64
 
-_OBS_LOCK_GUARD = __import__("threading").Lock()
-
-
-def _obs_session_lock(spark):
-    """Per-SparkSession mutex serializing the Observation-bearing section of
-    a batch (observe → write job → get → scrub). The Spark 4.1.x scrub
-    (session.scrub_observation_manager) tears down the session-global
-    ObservationManager, so a concurrent applier's pending ``Observation.get``
-    on the SAME session would block forever once another batch scrubs
-    (measured: multi-source fan-in deadlock). Sessions are the isolation
-    unit — ``spark.newSession()`` has its own ObservationManager, so giving
-    each ingest stream its own session keeps fan-in fully parallel; sharing
-    one session serializes the observed region (correct, alternating
-    batches)."""
-    import threading
-
-    with _OBS_LOCK_GUARD:
-        lk = getattr(spark, "_cdc_obs_lock", None)
-        if lk is None:
-            lk = threading.Lock()
-            spark._cdc_obs_lock = lk
-        return lk
+# driver bytes per collected winner locator: p int32 + o int64 + 2 × int32
+# counters
+_LOCATOR_ROW_BYTES = 20
 
 
 def _locator_supported(ranges: list[dict]) -> bool:
@@ -103,6 +85,31 @@ def _locator_supported(ranges: list[dict]) -> bool:
     )
 
 
+def _flag_outside(candidates: DataFrame, ranges: list[dict]) -> DataFrame:
+    """``candidates`` plus a boolean ``_outside``: true when the row's
+    ``(_lww_partition, _lww_offset)`` lies in no declared range, NULL stamps
+    included. Up to the cap this is one literal predicate (built as one
+    server-side-parsed SQL string for the same Py4J-chatter reason as
+    :func:`_hwm_filter`); beyond it, a broadcast-joined
+    ``partition → (lo, hi)`` lookup keeps the check range-exact without an
+    expression that grows with the partition count."""
+    if len(ranges) <= _HWM_PREDICATE_CAP:
+        known = " OR ".join(
+            f"(_lww_partition = {int(r['partition'])} AND _lww_offset "
+            f"BETWEEN {int(r['min_offset'])} AND {int(r['max_offset'])})"
+            for r in ranges)
+        return candidates.withColumn(
+            "_outside", F.expr(f"NOT coalesce({known}, false)"))
+    rng = candidates.sparkSession.createDataFrame(
+        [(int(r["partition"]), int(r["min_offset"]), int(r["max_offset"]))
+         for r in ranges],
+        "_lww_partition int, _rlo long, _rhi long")
+    return (candidates.join(F.broadcast(rng), "_lww_partition", "left")
+            .withColumn("_outside", F.expr(
+                "NOT coalesce(_lww_offset BETWEEN _rlo AND _rhi, false)"))
+            .drop("_rlo", "_rhi"))
+
+
 def _locator_winners(candidates: DataFrame, key_cols: list[str],
                      ranges: list[dict], table_path: str):
     """LWW winners WITHOUT a wide aggregate or a wide shuffle — returns
@@ -111,11 +118,16 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
 
     1. Winner locators ``(partition, offset)`` per key via the packed-stamp
        HashAggregate (`lake/merge.py::lww_winner_locators`) — the scan is
-       column-pruned to keys+stamp, payloads never leave their scan.
+       column-pruned to keys+stamp, payloads never leave their scan. The
+       same aggregation counts each key's rows and its rows outside
+       ``ranges``.
     2. The locators land driver-side as one Arrow transfer — O(winners per
        batch), bounded by ``batch_offsets``, the same order of driver traffic
        as any broadcast-join build (this is the one deliberate driver
-       round-trip in the apply path).
+       round-trip in the apply path). Summing the two counters is the
+       manifest cross-check: a row outside the declared ranges, or fewer
+       rows than the ranges declare (a truncated file), aborts here, before
+       anything is staged.
     3. Because the WAL contract makes per-partition offsets DENSE, the
        locator set becomes an EXACT bitmap (1 bit per in-window offset — no
        hashing, no false positives). The bitmap — plus per-partition
@@ -135,7 +147,7 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
        rows ever reach the decode/normalize UDFs.
     4. The filter passes exactly one row per key, so no further reduce runs.
 
-    Driver memory peak ≈ winner locators (16 B/winner Arrow transfer) +
+    Driver memory peak ≈ winner locators (20 B/winner Arrow transfer) +
     the PACKED bitmap (window_bits/8 — built packed via ``bitwise_or.at``,
     never unpacked to byte-per-bit) + 3 lookup arrays (≤ 8 B × 2^16 each)
     — the quantity ``apply_batch`` pre-checks against
@@ -149,14 +161,19 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
     import pyarrow.parquet as pq
 
     with phase("locator_collect"):
-        pdf = lww_winner_locators(candidates, key_cols).toPandas()
-        if len(pdf) and pdf[["p", "o"]].isna().any().any():
-            # a NULL (partition, offset) stamp violates the WAL contract the
-            # dense-offset arithmetic rests on; indexing with NaN would raise
-            # an opaque IndexError below — fail loudly instead
+        pdf = lww_winner_locators(_flag_outside(candidates, ranges), key_cols,
+                                  "_outside").toPandas()
+        declared = sum(r["max_offset"] - r["min_offset"] + 1 for r in ranges)
+        n_rows, n_out = int(pdf["n"].sum()), int(pdf["n_out"].sum())
+        if n_out or n_rows != declared:
+            # every row in range (which also rules out NULL stamps) and
+            # every declared offset present: only then may applied_offsets
+            # advance by the declared ranges
             raise RuntimeError(
-                "locator kernel: winner rows with NULL (partition, offset) — "
-                "the change log violates the WAL stamp contract")
+                f"manifest_ranges cross-check failed — {n_out} events outside "
+                f"the declared ranges, {n_rows} present vs {declared} "
+                "declared; committing would desync applied_offsets from the "
+                "actually-applied events")
         by_p = {}
         total_bits = 0
         for r in sorted(ranges, key=lambda r: r["partition"]):
@@ -170,17 +187,6 @@ def _locator_winners(candidates: DataFrame, key_cols: list[str],
             lo_arr[p], hi_arr[p], base_arr[p] = lo, hi, b
         pi = pdf["p"].to_numpy()
         oi = pdf["o"].to_numpy()
-        # free driver-side half of the manifest cross-check: a winner outside
-        # the declared (partition, offset) ranges proves the batch holds rows
-        # the manifest doesn't claim — abort before any write
-        pc = np.clip(pi, 0, max_p)
-        bad = (pi < 0) | (pi > max_p) | (oi < lo_arr[pc]) | (oi > hi_arr[pc])
-        if bad.any():
-            raise RuntimeError(
-                f"manifest_ranges cross-check failed — {int(bad.sum())} LWW "
-                "winners land outside the declared per-partition offset "
-                "ranges; committing would desync applied_offsets from the "
-                "actually-applied events")
         # build the bitmap PACKED (uint64 words) — peak memory window_bits/8,
         # matching the pre-flight budget; a byte-per-bit intermediate would
         # transiently cost 8× the budgeted size. Winner (p, o) pairs are
@@ -274,23 +280,73 @@ def _hwm_filter(batch_df: DataFrame, applied: dict[int, int]) -> DataFrame:
     )
 
 
+def _observed_ranges(fresh: DataFrame, batch_id: int,
+                     declared: list[dict] | None,
+                     source_partitions: list[int] | None) -> list[dict]:
+    """Per-source-partition ``(events, min, max)`` of the fresh rows from
+    one ≤P-row aggregate, checked before anything is staged: against the
+    ``source_partitions`` universe when given (a row outside it would apply
+    with no high-water mark recorded — redelivery would re-apply it), and
+    against the ``declared`` manifest ranges when given (count, min and max
+    must all match — a missing, extra or moved offset aborts). Returns the
+    applied ranges."""
+    with phase("ranges_aggregate"):
+        rows = (
+            fresh.groupBy("partition")
+            .agg(
+                F.count("*").alias("events"),
+                F.min("offset").alias("min_offset"),
+                F.max("offset").alias("max_offset"),
+            )
+            .collect()
+        )
+    got = {r["partition"]: (int(r["events"]), int(r["min_offset"]),
+                            int(r["max_offset"])) for r in rows}
+    if source_partitions is not None:
+        universe = {int(p) for p in source_partitions}
+        stray = sum(n for p, (n, _, _) in got.items()
+                    if p is None or p not in universe)
+        if stray:
+            raise RuntimeError(
+                f"batch {batch_id} holds {stray} events from partitions "
+                f"outside source_partitions ({len(universe)} ids) — offset "
+                "bookkeeping would miss them")
+    if declared is not None:
+        want = {r["partition"]: (r["events"], r["min_offset"], r["max_offset"])
+                for r in declared}
+        if got != want:
+            bad = sum(1 for p in got.keys() | want.keys()
+                      if got.get(p) != want.get(p))
+            raise RuntimeError(
+                f"batch {batch_id}: manifest_ranges cross-check failed — "
+                f"{bad} partition(s) hold events that differ from their "
+                "declared range; committing would desync applied_offsets "
+                "from the actually-applied events")
+        return declared
+    if None in got:
+        raise RuntimeError(
+            f"batch {batch_id} holds {got[None][0]} events with a NULL "
+            "partition — offset bookkeeping would miss them")
+    return [{"partition": int(p), "events": n, "min_offset": lo,
+             "max_offset": hi} for p, (n, lo, hi) in sorted(got.items())]
+
+
 def apply_batch(
     table: LakeTable,
     batch_df: DataFrame,
     batch_id: int,
-    dedup_mode: str = "agg",
     commit_noop: bool = False,
     write_salt: int = 1,
-    cache_batch: bool = False,
     decode_payload: bool = False,
     normalize: bool = False,
     source_partitions: list[int] | None = None,
     manifest_ranges: dict[int, tuple[int, int]] | None = None,
-    validate_manifest: bool = True,
     locator_driver_budget: int = 512 << 20,
     log_tail: dict[int, int] | None = None,
 ) -> dict:
-    """Apply one micro-batch of change events to ``table``. Returns stats.
+    """Apply one micro-batch of change events to ``table``. Returns stats;
+    ``stats["dedup_mode"]`` names the LWW kernel that ran (``"locator"`` or
+    ``"agg"``).
 
     A fully-stale batch (every event at or below the committed high-water
     marks — duplicate delivery / replay after restart) applies nothing; with
@@ -305,51 +361,34 @@ def apply_batch(
     scaler: allocation-heavy parsing contends at high core counts).
     ``normalize=True`` likewise NFC-normalizes winner text only.
 
-    ``dedup_mode='locator'`` (requires ``manifest_ranges``) determines each
-    key's winning row by a narrow packed-stamp HashAggregate and then fetches
-    exactly those rows through an exact dense-offset bitmap probe — no sort,
-    no wide aggregate, no payload bytes on any shuffle (see
-    :func:`_locator_winners`). Falls back to ``'agg'`` when the manifest
-    ranges are absent or exceed the packed stamp's bit budget.
-
-    ``dedup_mode='bucket'`` fuses LWW dedup onto a bucket-aligned shuffle:
-    candidates are hash-partitioned once by the table's bucket expression
-    (plus a key-derived salt when ``write_salt > 1`` — hot-conversation
-    splitting), the per-key ``max_by`` runs in-partition with no further
-    exchange, and winners land in the writer ALREADY partitioned — exactly
-    ONE wide shuffle per batch instead of two.
-
     ``manifest_ranges`` — per-source-partition ``(min, max)`` offset ranges
     present in ``batch_df``, DENSE per the WAL contract (gapless per-partition
     sequences; ``changelog.py`` stamps ``dense_offsets: true``). With it the
-    exactly-once bookkeeping is window arithmetic: no Observation, no extra
-    aggregate, and a fully-stale batch is skipped without reading any data.
-
-    ``source_partitions`` (the universe of source-partition ids, no ranges)
-    switches the bookkeeping to ``Observation`` metrics collected DURING the
-    write job — still exactly one Spark action per batch. A batch containing
-    a partition outside the list aborts before commit (staged files are
-    discarded) — silently applying it would leave the offset high-water mark
-    unrecorded and break exactly-once on redelivery.
-
-    ``validate_manifest`` (default True): the manifest-arithmetic path fully
-    trusts ``manifest_ranges`` — a batch holding rows OUTSIDE the declared
-    ranges (unknown partition, NULL partition, offset past the declared hi)
-    or MISSING rows the manifest claims (truncated/corrupt file) would
-    otherwise advance ``applied_offsets`` past never-applied events: silent
-    data loss. With validation on, two counters (rows total / rows outside
-    the declared ranges) ride the batch's first job as ``Observation``
-    metrics and are cross-checked against the arithmetic ``events_applied``
-    before commit; any mismatch aborts with staged files discarded —
-    mirroring the ``source_partitions`` guard. Skipped (with the same loud
-    fallback as the scrub guard) on Spark versions where the Observation
-    scrub is unavailable.
+    exactly-once bookkeeping is window arithmetic, a fully-stale batch is
+    skipped without reading any data, and the batch runs the ``locator``
+    kernel: each key's winning row is found by a narrow packed-stamp
+    HashAggregate and fetched through an exact dense-offset bitmap probe —
+    no sort, no wide aggregate, no payload bytes on any shuffle (see
+    :func:`_locator_winners`). The ranges are verified, not trusted: a batch
+    holding rows OUTSIDE them (unknown partition, NULL partition, offset
+    past the declared hi) or MISSING rows they claim (truncated/corrupt
+    file) would otherwise advance ``applied_offsets`` past never-applied
+    events — silent data loss — so it aborts before anything is staged.
 
     ``locator_driver_budget`` bounds the locator kernel's one deliberate
     driver round-trip (winner locators + offset bitmap). The pre-flight
-    bound ``events_in_window × 16B + window_bits / 8`` is checked against
-    it; a batch over budget (misconfigured huge ``batch_offsets``) degrades
-    to ``dedup_mode='agg'`` instead of OOMing the driver.
+    bound ``events_in_window × 20B + window_bits / 8`` is checked against
+    it; a batch over budget (misconfigured huge ``batch_offsets``) — or one
+    whose coordinates exceed the packed stamp's bit budget — runs the
+    ``agg`` kernel instead of OOMing the driver, with the declared ranges
+    checked by the ≤P-row aggregate.
+
+    ``source_partitions`` — the universe of source-partition ids (no ranges).
+    Batches without usable manifest ranges run one ≤P-row aggregate for
+    their applied ranges; a batch containing a partition outside the list
+    aborts there, before anything is staged — silently applying it would
+    leave the offset high-water mark unrecorded and break exactly-once on
+    redelivery.
 
     ``log_tail`` — per-source-partition FINAL offset of the log being
     consumed (replay: from the manifest; a live tail: the broker's
@@ -367,9 +406,7 @@ def apply_batch(
             for p, hi in log_tail.items()
         )
     t0 = time.monotonic()
-    spark = table.spark
 
-    _prelude_t0 = time.monotonic()
     late_decode = decode_payload and "payload" in batch_df.columns
     data_fields = [f for f in batch_df.schema.fields if f.name not in META_COLS]
     if late_decode:
@@ -404,12 +441,8 @@ def apply_batch(
         append_metrics(table.path, stats)
         return stats
 
-    obs = None
-    obs_lock = None  # held from observe() through the post-commit scrub
     ranges: list[dict] | None = None
-    events_applied: int | None = None
-    new_applied: dict[str, int] | None = None
-
+    use_locator = False
     if manifest_ranges is not None:
         # -- dense-offset arithmetic: applied range = window ∩ (hwm, ...] --
         ranges = []
@@ -421,205 +454,59 @@ def apply_batch(
         events_applied = sum(r["events"] for r in ranges)
         if events_applied == 0:
             return _skipped_stats()  # no scan, no job — resume is metadata-only
-        new_applied = {str(p): o for p, o in applied.items()}
-        for r in ranges:
-            p = str(r["partition"])
-            new_applied[p] = max(int(new_applied.get(p, -1)), int(r["max_offset"]))
+        # the locator kernel needs the packed stamp's bit budget and a
+        # bounded driver transfer: winners ≤ events in the window, and
+        # window_bits/8 is the exact bitmap (window_bits == events_applied
+        # for dense ranges)
+        use_locator = (_locator_supported(ranges)
+                       and events_applied * _LOCATOR_ROW_BYTES
+                       + events_applied // 8 <= locator_driver_budget)
 
     # -- exactly-once: keep only offsets beyond the committed high-water mark --
     fresh = _hwm_filter(batch_df, applied)
+    if not use_locator:
+        ranges = _observed_ranges(fresh, batch_id, ranges, source_partitions)
+        events_applied = sum(r["events"] for r in ranges)
+        if events_applied == 0:
+            return _skipped_stats()
+    new_applied = {str(p): o for p, o in applied.items()}
+    for r in ranges:
+        p = str(r["partition"])
+        new_applied[p] = max(int(new_applied.get(p, -1)), int(r["max_offset"]))
 
-    # Optional: cache the filtered batch so the range aggregate and the
-    # dedup+write job share one source scan. Usually unnecessary — the ranges
-    # job reads only (offset, partition) after column pruning, so the second
-    # scan is cheap — and at high core counts cache materialization costs
-    # more than it saves (measured). MEMORY_AND_DISK so oversized batches
-    # spill instead of OOMing.
-    cached = None
-    if cache_batch:
-        from pyspark import StorageLevel
+    # -- internal candidate rows: data cols aligned to merged schema + stamps
+    # (selectExpr over SQL strings — one Py4J call instead of ~5 per column)
+    have = set(batch_df.columns)
+    decode_names = {"role", "text", "tool"} if late_decode else set()
+    data_exprs = [
+        (f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
+         if f.name in have
+         else f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`")
+        for f in merged.fields
+        if f.name not in decode_names
+    ]
+    if late_decode:
+        data_exprs.append("`payload`")
+    candidates = fresh.selectExpr(
+        *data_exprs,
+        "(op = 'D') AS _deleted",
+        "CAST(offset AS bigint) AS _lww_offset",
+        "CAST(partition AS int) AS _lww_partition",
+    )
+    # driver-side plan construction up to this point (schema merge, hwm
+    # filter, candidate projection; plus the ranges aggregate on agg
+    # batches) — a per-micro-batch fixed cost worth watching
+    _record("plan_prelude", time.monotonic() - t0)
 
-        fresh = cached = fresh.persist(StorageLevel.MEMORY_AND_DISK)
-
-    from mimic_iv_etl_spark.session import observation_scrub_available
-
-    # ONE try/finally covers everything from (potential) lock acquisition
-    # through commit: the locator staging dir and the Observation
-    # session-poisoning scrub (Spark 4.1.x ObservationManager serialization
-    # bug — see session.scrub_observation_manager) must be cleaned up on
-    # EVERY exit — including a locator abort (manifest cross-check,
-    # NULL-stamp guard) or any Spark error — or later jobs capturing the
-    # session fail with NotSerializableException and _staging/lww-bitmap-*
-    # dirs leak (ADVICE r04). The obs session lock is acquired INSIDE the
-    # try: the old structure acquired it before the protected region, so a
-    # Py4J/analysis error while building the observe or candidate plans
-    # leaked the lock and permanently deadlocked every later
-    # Observation-bearing batch on the session (ADVICE r05). Batches are
-    # sequential on a session, so no other observation is in flight when
-    # the scrub runs.
-    obs_val = None
+    # the locator staging dir must be removed on EVERY exit — a failed write
+    # included — or _staging/lww-bitmap-* dirs leak
     locator_cleanup = None
-    pre_partitioned = dedup_mode == "bucket"
     try:
-        if (manifest_ranges is not None and validate_manifest
-                and observation_scrub_available()):
-            # -- manifest cross-check: counters ride the batch's first job --
-            import uuid
-
-            from pyspark.sql import Observation
-
-            drop_rng = ()
-            if len(ranges) <= _HWM_PREDICATE_CAP:
-                # single-expr SQL build for the same Py4J-chatter reason as
-                # _hwm_filter (measured ~230 ms/batch as chained Columns)
-                known = F.expr(" OR ".join(
-                    f"(partition = {int(r['partition'])} AND offset BETWEEN "
-                    f"{int(r['min_offset'])} AND {int(r['max_offset'])})"
-                    for r in ranges))
-            else:
-                # beyond the chained-predicate cap the range check rides a
-                # broadcast-joined (partition → lo, hi) lookup instead of
-                # degrading to membership-only — a corrupt batch whose
-                # out-of-range offsets in declared partitions numerically
-                # cancel missing in-range rows would pass a membership+count
-                # check but is caught here (ADVICE r04); same shape as
-                # _hwm_filter's fallback, one broadcast-hash-join stage on
-                # the batch's first job
-                rng = spark.createDataFrame(
-                    [(int(r["partition"]), int(r["min_offset"]),
-                      int(r["max_offset"])) for r in ranges],
-                    "partition int, _rlo long, _rhi long")
-                fresh = fresh.join(F.broadcast(rng), "partition", "left")
-                known = (F.col("_rlo").isNotNull()
-                         & (F.col("offset") >= F.col("_rlo"))
-                         & (F.col("offset") <= F.col("_rhi")))
-                drop_rng = ("_rlo", "_rhi")
-            obs_lock = _obs_session_lock(spark)
-            obs_lock.acquire()
-            obs_val = Observation(f"validate_manifest_{uuid.uuid4().hex[:8]}")
-            fresh = fresh.observe(
-                obs_val,
-                F.count(F.lit(1)).alias("n_total"),
-                F.count(F.when(F.col("partition").isNull() | ~known, True))
-                .alias("n_unknown"),
-            )
-            if drop_rng:
-                fresh = fresh.drop(*drop_rng)
-
-        if (manifest_ranges is None and source_partitions is not None
-                and observation_scrub_available()):
-            # per-partition ranges observed during the write job — no extra
-            # action
-            import uuid
-
-            from pyspark.sql import Observation
-
-            obs_lock = _obs_session_lock(spark)
-            obs_lock.acquire()
-            obs = Observation(f"apply_ranges_{uuid.uuid4().hex[:8]}")
-            # NULL partitions must count as unknown too: `~isin` alone
-            # evaluates to NULL for them, silently exempting such rows from
-            # the guard
-            aggs = [F.count(F.when(
-                F.col("partition").isNull()
-                | ~F.col("partition").isin([int(p) for p in source_partitions]),
-                True
-            )).alias("n_unknown")]
-            for p in source_partitions:
-                cond = F.col("partition") == int(p)
-                aggs += [
-                    F.count(F.when(cond, True)).alias(f"n_{p}"),
-                    F.min(F.when(cond, F.col("offset"))).alias(f"lo_{p}"),
-                    F.max(F.when(cond, F.col("offset"))).alias(f"hi_{p}"),
-                ]
-            fresh = fresh.observe(obs, *aggs)
-        elif manifest_ranges is None:
-            # the single driver-side aggregate: per-source-partition ranges
-            # (≤P rows)
-            with phase("ranges_aggregate"):
-                collected = (
-                    fresh.groupBy("partition")
-                    .agg(
-                        F.count("*").alias("events"),
-                        F.min("offset").alias("min_offset"),
-                        F.max("offset").alias("max_offset"),
-                    )
-                    .collect()
-                )
-            ranges = [{"partition": int(r["partition"]),
-                       "events": int(r["events"]),
-                       "min_offset": int(r["min_offset"]),
-                       "max_offset": int(r["max_offset"])} for r in collected]
-            events_applied = sum(r["events"] for r in ranges)
-            if events_applied == 0:
-                if cached is not None:
-                    cached.unpersist()
-                return _skipped_stats()
-            new_applied = {str(p): o for p, o in applied.items()}
-            for r in ranges:
-                p = str(r["partition"])
-                new_applied[p] = max(int(new_applied.get(p, -1)),
-                                     int(r["max_offset"]))
-
-        # -- internal candidate rows: data cols aligned to merged schema +
-        # stamps (selectExpr over SQL strings — one Py4J call instead of ~5
-        # per column)
-        have = set(batch_df.columns)
-        decode_names = {"role", "text", "tool"} if late_decode else set()
-        data_exprs = [
-            (f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
-             if f.name in have
-             else f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`")
-            for f in merged.fields
-            if f.name not in decode_names
-        ]
-        if late_decode:
-            data_exprs.append("`payload`")
-        candidates = fresh.selectExpr(
-            *data_exprs,
-            "(op = 'D') AS _deleted",
-            "CAST(offset AS bigint) AS _lww_offset",
-            "CAST(partition AS int) AS _lww_partition",
-        )
-        # driver-side plan construction up to this point (schema merge, hwm
-        # filter, validation observe, candidate projection) — pure
-        # Py4J/analysis work, no Spark job; a per-micro-batch fixed cost
-        # worth watching
-        from mimic_iv_etl_spark.cdc.profiling import record as _record
-
-        _record("plan_prelude", time.monotonic() - _prelude_t0)
-
-        if dedup_mode == "locator":
-            # locator needs the dense-manifest arithmetic ranges, the packed
-            # stamp's bit budget, and a bounded driver transfer; outside
-            # them the classic kernel is the answer
-            usable = (manifest_ranges is not None and ranges
-                      and _locator_supported(ranges))
-            if usable:
-                window_bits = sum(
-                    r["max_offset"] - r["min_offset"] + 1 for r in ranges)
-                # winners ≤ events in the window → events_applied × 16B
-                # bounds the locator Arrow transfer; window_bits/8 is the
-                # exact bitmap
-                if (events_applied * 16 + window_bits // 8
-                        > locator_driver_budget):
-                    usable = False
-            if not usable:
-                dedup_mode = "agg"
-
-        if pre_partitioned:
-            # bucket computed BEFORE the (single) shuffle so the LWW agg and
-            # the partitioned write share one exchange
-            candidates = candidates.withColumn(BUCKET_COL, table.bucket_expr())
-            winners = lww_bucket_fused(
-                candidates, table.key_cols, bucket_col=BUCKET_COL,
-                num_buckets=table.n_buckets, salt=write_salt,
-            )
-        elif dedup_mode == "locator":
+        if use_locator:
             winners, locator_cleanup = _locator_winners(
                 candidates, table.key_cols, ranges, table.path)
         else:
-            winners = lww_reduce(candidates, table.key_cols, mode=dedup_mode)
+            winners = lww_reduce(candidates, table.key_cols)
         _wplan_t0 = time.monotonic()
         if late_decode:
             from mimic_iv_etl_spark.functions.textfns import decode_payload_json
@@ -635,82 +522,19 @@ def apply_batch(
             from mimic_iv_etl_spark.functions.textfns import normalize_text
 
             winners = winners.withColumn("text", normalize_text(F.col("text")))
-        if not pre_partitioned:
-            winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
+        winners = winners.withColumn(BUCKET_COL, table.bucket_expr())
         _record("winners_plan", time.monotonic() - _wplan_t0)
 
-        if obs is not None:
-            with phase("append_delta"):
-                entries, schema_id, schemas = table.stage_delta(
-                    winners, new_schema=merged if evolved else None,
-                    write_salt=write_salt, pre_partitioned=pre_partitioned)
-                m = obs.get  # blocks on the write job just run
-                if m["n_unknown"]:
-                    table.discard_staged(entries)
-                    raise RuntimeError(
-                        f"batch {batch_id} holds {m['n_unknown']} events from "
-                        f"partitions outside source_partitions={source_partitions}"
-                        " — offset bookkeeping would miss them")
-                ranges = [
-                    {"partition": int(p), "events": int(m[f"n_{p}"]),
-                     "min_offset": int(m[f"lo_{p}"]), "max_offset": int(m[f"hi_{p}"])}
-                    for p in source_partitions if m[f"n_{p}"]
-                ]
-                events_applied = sum(r["events"] for r in ranges)
-                if events_applied == 0:
-                    table.discard_staged(entries)
-                    if cached is not None:
-                        cached.unpersist()
-                    return _skipped_stats()
-                new_applied = {str(p): o for p, o in applied.items()}
-                for r in ranges:
-                    p = str(r["partition"])
-                    new_applied[p] = max(int(new_applied.get(p, -1)),
-                                         int(r["max_offset"]))
-                table.commit_delta(
-                    entries, schema_id, schemas,
-                    summary={"applied_offsets": new_applied, "batch_id": batch_id})
-        elif obs_val is not None:
-            with phase("append_delta"):
-                entries, schema_id, schemas = table.stage_delta(
-                    winners, new_schema=merged if evolved else None,
-                    write_salt=write_salt, pre_partitioned=pre_partitioned)
-                m = obs_val.get  # resolved by the batch's first job
-                if m["n_unknown"] or int(m["n_total"]) != int(events_applied):
-                    table.discard_staged(entries)
-                    raise RuntimeError(
-                        f"batch {batch_id}: manifest_ranges cross-check failed "
-                        f"— {m['n_unknown']} events outside the declared "
-                        f"ranges, {m['n_total']} present vs {events_applied} "
-                        "declared; committing would desync applied_offsets "
-                        "from the actually-applied events")
-                table.commit_delta(
-                    entries, schema_id, schemas,
-                    summary={"applied_offsets": new_applied,
-                             "batch_id": batch_id})
-        else:
-            with phase("append_delta"):
-                table.append_delta(
-                    winners,
-                    new_schema=merged if evolved else None,
-                    summary={"applied_offsets": new_applied, "batch_id": batch_id},
-                    write_salt=write_salt,
-                    pre_partitioned=pre_partitioned,
-                )
+        with phase("append_delta"):
+            table.append_delta(
+                winners,
+                new_schema=merged if evolved else None,
+                summary={"applied_offsets": new_applied, "batch_id": batch_id},
+                write_salt=write_salt,
+            )
     finally:
         if locator_cleanup is not None:
             locator_cleanup()
-        try:
-            if obs is not None or obs_val is not None:
-                from mimic_iv_etl_spark.session import scrub_observation_manager
-
-                with phase("observation_scrub"):
-                    scrub_observation_manager(spark)
-        finally:
-            if obs_lock is not None:
-                obs_lock.release()
-    if cached is not None:
-        cached.unpersist()
 
     new_files = table.last_new_entries
     n_winners = sum(e.get("rows", 0) for e in new_files)
@@ -728,7 +552,7 @@ def apply_batch(
         "skipped": False,
         "snapshot_version": table.version,
         "lag_events": _lag(new_applied),
-        "dedup_mode": dedup_mode,
+        "dedup_mode": "locator" if use_locator else "agg",
     }
     with phase("metrics_lineage"):
         append_metrics(table.path, stats)

@@ -113,12 +113,12 @@ def _offset_bounds(tranche_dir: str) -> tuple[int, int]:
     return int(lo), int(hi)
 
 
-def _partition_ids(tranche_dir: str, cap: int = 64) -> list[int] | None:
+def _partition_ids(tranche_dir: str) -> list[int] | None:
     """Source-partition universe of a tranche from parquet footer stats only
-    (no data IO). Lets apply_batch fold the offset-range bookkeeping into the
-    write job as Observation metrics (one Spark action per batch). Returns
-    None — the separate-aggregate fallback — when stats are missing or the
-    id range is too wide for conditional aggregates."""
+    (no data IO): every id between the smallest and largest ``partition``
+    value. apply_batch aborts a batch holding a row outside it, and replay
+    skips a window only when all of these ids are applied past it. Returns
+    None when stats are missing."""
     lo, hi = None, None
     for f in sorted(glob.glob(os.path.join(tranche_dir, "*.parquet"))):
         md = pq.read_metadata(f)
@@ -132,7 +132,7 @@ def _partition_ids(tranche_dir: str, cap: int = 64) -> list[int] | None:
                 return None
             lo = st.min if lo is None else min(lo, st.min)
             hi = st.max if hi is None else max(hi, st.max)
-    if lo is None or hi - lo + 1 > cap:
+    if lo is None:
         return None
     return list(range(int(lo), int(hi) + 1))
 
@@ -144,7 +144,6 @@ def replay_log(
     schema=None,
     batch_offsets: int = 100_000,
     n_buckets: int = 32,
-    dedup_mode: str = "auto",
     compact_every: int | None = None,
     drop_payload: bool = True,
     write_salt: int = 1,
@@ -152,7 +151,6 @@ def replay_log(
     decode_payload: bool = False,
     normalize: bool = False,
     flush_sidecars_every: int | None = 256,
-    validate_manifest: bool = True,
 ) -> dict:
     """Replay the whole log into the table at ``table_path`` (created with
     ``schema`` if absent). ``batch_offsets`` sets the per-partition offset
@@ -164,11 +162,11 @@ def replay_log(
     once at the end of the replay (one tiny Spark job per flush, amortized
     off the apply hot path); ``None`` disables.
 
-    ``dedup_mode='auto'`` (default) picks the packed-stamp ``locator`` LWW
-    kernel when the log manifest carries verified dense per-partition offset
-    ranges, and the classic ``agg`` kernel otherwise; explicit modes
-    (``agg`` / ``window`` / ``salted_window`` / ``bucket`` / ``locator``)
-    are passed through.
+    Windows of a log whose manifest carries dense per-partition offset
+    ranges run the packed-stamp ``locator`` LWW kernel; others run the
+    ``agg`` kernel (``apply_batch`` picks by that input contract).
+    ``decode_payload``/``normalize`` run on LWW winners only, inside
+    ``apply_batch``, exactly as in ``stream_log``.
     """
     if LakeTable.exists(table_path):
         table = LakeTable(spark, table_path)
@@ -195,14 +193,12 @@ def replay_log(
                 pids = [int(p) for p in t_meta["partitions"]]
                 if t_meta.get("dense_offsets") and "partition_offsets" in t_meta:
                     # dense per-partition ranges → apply_batch does offset
-                    # bookkeeping as pure window arithmetic (no Observation,
-                    # no aggregate, no per-row conditional counters)
+                    # bookkeeping as pure window arithmetic (no ranges
+                    # aggregate) on the locator kernel
                     part_offsets = {
                         int(p): (int(r[0]), int(r[1]))
                         for p, r in t_meta["partition_offsets"].items()
                     }
-                if len(pids) > 64:  # conditional-agg fan-out cap, as below
-                    pids = None
             else:
                 lo, hi = _offset_bounds(tranche)
                 pids = _partition_ids(tranche)
@@ -216,18 +212,16 @@ def replay_log(
             # parsed (at a 10:1 update ratio that is 90% less JSON work, the
             # apply path's dominant and worst-scaling CPU).
             df = df.drop("role", "text", "tool")
-        elif normalize:
-            from mimic_iv_etl_spark.functions import normalize_text
-
-            df = df.withColumn("text", normalize_text(F.col("text")))
         if drop_payload and not late_decode and "payload" in df.columns:
             df = df.drop("payload")
         start = lo
         while start <= hi:
             end = start + batch_offsets  # exclusive
-            # checkpoint resume: skip windows fully below every high-water mark
+            # checkpoint resume: skip a window only when every partition of
+            # THIS tranche is applied past it — the table may hold other
+            # sources' partitions (fan-in), whose marks say nothing here
             applied = table.applied_offsets
-            if applied and len(applied) > 0 and end - 1 <= min(applied.values()):
+            if pids and all(applied.get(p, -1) >= end - 1 for p in pids):
                 n_skipped_windows += 1
                 start = end
                 continue
@@ -240,17 +234,13 @@ def replay_log(
                     w_lo, w_hi = max(p_lo, start), min(p_hi, end - 1)
                     if w_lo <= w_hi:
                         window_ranges[p] = (w_lo, w_hi)
-            mode = dedup_mode
-            if mode == "auto":
-                mode = "locator" if window_ranges else "agg"
             def _apply_once():
                 return apply_batch(table, batch, batch_id=batch_seq,
-                                   dedup_mode=mode, write_salt=write_salt,
+                                   write_salt=write_salt,
                                    decode_payload=late_decode,
-                                   normalize=normalize and late_decode,
+                                   normalize=normalize,
                                    source_partitions=pids,
                                    manifest_ranges=window_ranges,
-                                   validate_manifest=validate_manifest,
                                    log_tail=log_tail)
 
             try:

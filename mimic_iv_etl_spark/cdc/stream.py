@@ -30,8 +30,8 @@ def _tranche_file_offsets(tranche_dir: str) -> dict[str, dict[int, tuple[int, in
     (``changelog.py`` stamps them at write time; ``upgrade_manifest`` backfills
     and density-verifies older logs). Keyed by file basename. None when the
     manifest is absent, predates the field, or the log failed the per-file
-    density check — the streaming path then falls back to Observation-based
-    bookkeeping and the ``agg`` LWW kernel."""
+    density check — the streaming path then falls back to the ``agg`` LWW
+    kernel with ranges-aggregate bookkeeping."""
     log_dir = os.path.dirname(tranche_dir.rstrip("/"))
     path = os.path.join(log_dir, "manifest.json")
     if not os.path.exists(path):
@@ -82,7 +82,7 @@ def _batch_ranges(names: set[str] | None,
                   ) -> dict[int, tuple[int, int]] | None:
     """Dense per-partition (min, max) offset ranges of one file-source
     micro-batch, derived from the manifest's per-file ranges and the batch's
-    file set. Returns None — the Observation fallback — when any batch
+    file set. Returns None — the ``agg`` fallback — when any batch
     file is missing from the manifest or the merged ranges fail the density
     cross-check (files of one partition must tile a gapless offset span)."""
     if not file_offsets:
@@ -110,7 +110,6 @@ def stream_tranche(
     table: LakeTable,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    dedup_mode: str = "auto",
     on_batch: Callable[[int, dict], None] | None = None,
     drop_payload: bool = True,
     decode_payload: bool = False,
@@ -122,13 +121,14 @@ def stream_tranche(
     ``decode_payload``/``normalize`` run on LWW winners only inside
     ``apply_batch`` (the encoded-ingest shape).
 
-    ``dedup_mode='auto'`` (default) mirrors batch replay: each micro-batch's
-    dense per-partition offset ranges are looked up from the manifest's
-    per-file ranges (``_batch_ranges``), so foreachBatch runs the same
-    locator LWW kernel + arithmetic offset bookkeeping as ``replay_log`` —
-    no SortAggregate, no Observation on the hot path. Batches whose files
-    aren't manifest-covered fall back to Observation bookkeeping (universe
-    from the tranche's parquet footer stats) and the ``agg`` kernel.
+    Kernel choice mirrors batch replay: each micro-batch's dense
+    per-partition offset ranges are looked up from the manifest's per-file
+    ranges (``_batch_ranges``), so foreachBatch runs the same locator LWW
+    kernel + arithmetic offset bookkeeping as ``replay_log`` — no
+    SortAggregate, no ranges aggregate on the hot path. Batches whose files
+    aren't manifest-covered run the ``agg`` kernel with the ranges
+    aggregate, guarded by the universe from the tranche's parquet footer
+    stats.
 
     ``on_batch(epoch_id, stats)`` is a test hook (e.g. to crash mid-stream).
     """
@@ -159,12 +159,8 @@ def stream_tranche(
         if file_offsets:
             ranges = _batch_ranges(_batch_files(checkpoint_dir, epoch_id),
                                    file_offsets)
-        mode = dedup_mode
-        if mode == "auto":
-            mode = "locator" if ranges else "agg"
         def _apply_once():
             return apply_batch(table, batch_df, batch_id=epoch_id,
-                               dedup_mode=mode,
                                decode_payload=late_decode,
                                normalize=normalize,
                                source_partitions=pids,
@@ -201,7 +197,6 @@ def stream_log(
     schema=None,
     n_buckets: int = 32,
     max_files_per_trigger: int = 1,
-    dedup_mode: str = "auto",
     on_batch: Callable[[int, dict], None] | None = None,
     decode_payload: bool = False,
     normalize: bool = False,
@@ -223,7 +218,6 @@ def stream_log(
             table,
             ckpt,
             max_files_per_trigger=max_files_per_trigger,
-            dedup_mode=dedup_mode,
             on_batch=on_batch,
             decode_payload=decode_payload,
             normalize=normalize,

@@ -543,7 +543,6 @@ class LakeTable:
     def _stage_write(
         self, state_df: DataFrame, public: T.StructType, schema_id: int, kind: str,
         write_salt: int = 1, n_buckets: int | None = None,
-        pre_partitioned: bool = False,
         cluster_by: list[str] | None = None, split: int = 1,
     ) -> list[dict]:
         """Write ``state_df`` (internal schema + ``_bucket`` routing column) as
@@ -566,12 +565,7 @@ class LakeTable:
         # buckets (salt derives from the second key column, so rows of one
         # conversation still land in one bucket dir, just in ≤salt files).
         n_buckets = self.n_buckets if n_buckets is None else n_buckets
-        if pre_partitioned:
-            # caller guarantees the rows are already hash-partitioned by
-            # BUCKET_COL (e.g. the fused LWW plan) — repartitioning again
-            # would re-shuffle every winner byte for an identical layout
-            pass
-        elif cluster_by:
+        if cluster_by:
             # clustered layout (compaction's data-skipping path): range-
             # partition on (bucket, cluster cols) — each task holds one
             # contiguous cluster-key range of (mostly) one bucket, so with
@@ -774,19 +768,15 @@ class LakeTable:
         winners_df: DataFrame,
         new_schema: T.StructType | None = None,
         write_salt: int = 1,
-        pre_partitioned: bool = False,
     ) -> tuple[list[dict], int, dict]:
         """First half of :meth:`append_delta`: run the write job and land the
         delta files in ``data/`` WITHOUT committing a snapshot. Returns
         ``(entries, schema_id, schemas)`` for :meth:`commit_delta`. Until that
         commit the files are unreferenced (invisible to readers, reclaimable
-        by :meth:`vacuum`) — callers use the gap to inspect metrics observed
-        during the write (e.g. the apply path's per-partition offset ranges)
-        and may abandon a zero-row stage at no cost."""
+        by :meth:`vacuum`, or dropped at once with :meth:`discard_staged`)."""
         public, schema_id, schemas = self._next_schema(new_schema)
         entries = self._stage_write(winners_df, public, schema_id, "delta",
-                                    write_salt=write_salt,
-                                    pre_partitioned=pre_partitioned)
+                                    write_salt=write_salt)
         return entries, schema_id, schemas
 
     def commit_delta(
@@ -839,15 +829,13 @@ class LakeTable:
         new_schema: T.StructType | None = None,
         summary: dict | None = None,
         write_salt: int = 1,
-        pre_partitioned: bool = False,
     ) -> "LakeTable":
         """Merge-on-read upsert commit: append per-batch LWW winners (internal
         schema + ``_bucket``) as delta files. Never reads existing data —
         ingest cost is O(batch). ``summary['applied_offsets']`` must be the
         full updated map (the exactly-once source of truth)."""
         entries, schema_id, schemas = self.stage_delta(
-            winners_df, new_schema=new_schema, write_salt=write_salt,
-            pre_partitioned=pre_partitioned)
+            winners_df, new_schema=new_schema, write_salt=write_salt)
         return self.commit_delta(entries, schema_id, schemas, summary)
 
     def overwrite_buckets(

@@ -14,7 +14,7 @@ from mimic_iv_etl_spark.cdc.apply import apply_batch
 from mimic_iv_etl_spark.cdc.metrics import read_lineage, read_metrics
 from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.lake.table import LakeTable
-from tests.util import TRANSCRIPT_SCHEMA, assert_final_state_equal
+from tests.util import TRANSCRIPT_SCHEMA, assert_final_state_equal, manifest_spans
 
 
 def _load_log(spark, log_dir):
@@ -34,11 +34,17 @@ def _batches(df, n_batches, n_partitions, total):
     ]
 
 
-@pytest.mark.parametrize("mode", ["agg", "salted_window"])
+@pytest.mark.parametrize("mode", ["agg", "locator"])
 def test_single_batch_replay_matches_oracle(spark, small_log, tmp_path, mode):
-    d, spec, _ = small_log
+    """The whole log as one batch through each LWW kernel: without ranges
+    the batch runs agg; the log's dense per-partition spans from its
+    manifest put it on the locator kernel."""
+    d, spec, manifest = small_log
+    ranges = manifest_spans(manifest) if mode == "locator" else None
     tbl = LakeTable.create(spark, str(tmp_path / f"t_{mode}"), TRANSCRIPT_SCHEMA, n_buckets=8)
-    stats = apply_batch(tbl, _load_log(spark, d).drop("payload"), batch_id=0, dedup_mode=mode)
+    stats = apply_batch(tbl, _load_log(spark, d).drop("payload"), batch_id=0,
+                        manifest_ranges=ranges)
+    assert stats["dedup_mode"] == mode
     assert stats["events_applied"] == spec.n_events
     assert stats["winners"] > 0
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
@@ -135,9 +141,9 @@ def test_schema_evolution_mid_log(spark, evolved_log, tmp_path):
 
 def test_observed_ranges_mode_matches_oracle_and_guards_universe(
         spark, small_log, tmp_path):
-    """source_partitions mode: offset bookkeeping observed during the write
-    job. Wrong universe → abort before commit with staged files discarded;
-    right universe → oracle-equal state; stale redelivery → skipped no-op."""
+    """source_partitions mode: offset bookkeeping from the ≤P-row ranges
+    aggregate. Wrong universe → abort before anything is staged; right
+    universe → oracle-equal state; stale redelivery → skipped no-op."""
     import pytest
 
     d, spec, _ = small_log
@@ -149,7 +155,7 @@ def test_observed_ranges_mode_matches_oracle_and_guards_universe(
         apply_batch(tbl, log, batch_id=0, source_partitions=[0, 1])
     assert tbl.refresh().version == 0, "aborted batch must not commit"
     assert tbl.vacuum(grace_seconds=0.0)["data_files"] == 0, \
-        "aborted batch must discard its staged files"
+        "aborted batch must leave no data files"
 
     universe = list(range(spec.n_partitions))
     stats = apply_batch(tbl, log, batch_id=1, source_partitions=universe)
@@ -162,11 +168,10 @@ def test_observed_ranges_mode_matches_oracle_and_guards_universe(
     assert tbl.refresh().version == v, "stale redelivery must not commit"
     assert tbl.vacuum(grace_seconds=0.0)["data_files"] == 0
 
-    # Spark 4.1.x: Observation use poisons the session — every later job
-    # whose task closure captures the SparkSession (all pyspark.ml model
-    # transforms) dies with NotSerializableException: ObservationManager.
-    # apply_batch must scrub that state (session.scrub_observation_manager),
-    # or the engine silently breaks unrelated ML workloads session-wide.
+    # the ingest path must leave the session usable for jobs whose task
+    # closure captures the SparkSession (all pyspark.ml model transforms) —
+    # per-session listener state left by offset bookkeeping once made them
+    # die with NotSerializableException
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
 

@@ -345,7 +345,8 @@ def test_online_rebucket_under_live_ingest(spark, small_log, tmp_path):
     assert set(tbl.applied_offsets) == set(range(spec.n_partitions))
 
 
-@pytest.mark.parametrize("topology", ["shared_session", "session_per_stream"])
+@pytest.mark.parametrize("topology", ["shared_session", "session_per_stream",
+                                      "sequential"])
 def test_multi_source_fan_in(spark, tmp_path, topology):
     """Two change streams with DISJOINT source-partition id ranges ingest
     into one table concurrently (Kafka-style fan-in: each stream owns its
@@ -356,10 +357,11 @@ def test_multi_source_fan_in(spark, tmp_path, topology):
     over the UNION of both logs (overlapping conv ids resolved by the
     global (ts, offset, partition) total order).
 
-    Both deployment topologies: a SHARED SparkSession (the per-session
-    observation lock serializes the observe→scrub window; batches alternate)
-    and a session PER STREAM (isolated ObservationManagers — the fully
-    parallel shape; also how separate driver processes would behave)."""
+    Deployment topologies: a SHARED SparkSession, a session PER STREAM (also
+    how separate driver processes would behave), and the two sources
+    replayed one after the other — the second replay starts on a table
+    whose high-water marks all belong to the first source's partitions and
+    must not skip any of its own windows on their account."""
     import os
     import threading
 
@@ -391,12 +393,16 @@ def test_multi_source_fan_in(spark, tmp_path, topology):
         except BaseException as e:  # noqa: BLE001
             errors.append(e)
 
-    threads = [threading.Thread(target=ingest, args=("a", la), daemon=True),
-               threading.Thread(target=ingest, args=("b", lb), daemon=True)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=300)
+    if topology == "sequential":
+        ingest("a", la)
+        ingest("b", lb)
+    else:
+        threads = [threading.Thread(target=ingest, args=("a", la), daemon=True),
+                   threading.Thread(target=ingest, args=("b", lb), daemon=True)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
     assert not errors, f"ingest died: {errors[0]!r}"
     assert results["a"]["events_applied"] == 4_000
     assert results["b"]["events_applied"] == 4_000

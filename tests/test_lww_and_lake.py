@@ -1,14 +1,15 @@
-"""Unit tests: LWW reduce strategies, lake table commits, schema merge."""
+"""Unit tests: LWW kernels, lake table commits, schema merge."""
 
 from __future__ import annotations
 
 import datetime as dt
+import glob
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mimic_iv_etl_spark.lake.merge import lww_reduce
+from mimic_iv_etl_spark.lake.merge import lww_reduce, lww_winner_locators
 from mimic_iv_etl_spark.lake.schema import merge_schemas, widen
 from mimic_iv_etl_spark.lake.table import BUCKET_COL, CommitConflict, LakeTable
 from tests.util import TRANSCRIPT_SCHEMA
@@ -44,30 +45,49 @@ EXPECT = {("a", 0): ("v2", False), ("a", 1): ("t2", False),
           ("b", 0): (None, True), ("c", 0): ("p1", False)}
 
 
-@pytest.mark.parametrize("mode", ["agg", "window", "salted_window"])
+@pytest.mark.parametrize("mode", ["agg", "locator"])
 def test_lww_reduce_semantics(spark, mode):
-    out = lww_reduce(_cand(spark, ROWS), ["conv_id", "turn_idx"], mode=mode, salt_buckets=3)
+    cand = _cand(spark, ROWS)
+    keys = ["conv_id", "turn_idx"]
+    if mode == "agg":
+        out = lww_reduce(cand, keys)
+    else:
+        # (partition, offset) is unique in ROWS, so the locators join back
+        # to exactly the winning rows
+        flagged = cand.withColumn("_outside", F.lit(False))
+        locs = lww_winner_locators(flagged, keys, "_outside").select(
+            F.col("p").alias("_lww_partition"), F.col("o").alias("_lww_offset"))
+        out = cand.join(locs, ["_lww_partition", "_lww_offset"])
     got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["_deleted"]) for r in out.collect()}
     assert got == EXPECT
 
 
-def test_lww_modes_equivalent_on_random_data(spark, small_log):
+def test_lww_modes_equivalent_on_random_data(spark, small_log, tmp_path):
+    """Full-row equality of the two kernels: agg's max_by rows vs the rows
+    the locator kernel fetches through its offset bitmap."""
+    from mimic_iv_etl_spark.cdc.apply import _locator_winners
+    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
+
     d, _, _ = small_log
+    tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
+    ranges = [{"partition": int(p), "min_offset": int(r[0]), "max_offset": int(r[1])}
+              for p, r in _manifest_tranches(d)[tranche]["partition_offsets"].items()]
     df = (
-        spark.read.parquet(f"{d}/tranche-0")
+        spark.read.parquet(tranche)
         .withColumnRenamed("offset", "_lww_offset")
         .withColumnRenamed("partition", "_lww_partition")
         .withColumn("_deleted", F.col("op") == "D")
         .drop("op", "payload")
     )
-    outs = [
-        lww_reduce(df, ["conv_id", "turn_idx"], mode=m)
-        .orderBy("conv_id", "turn_idx")
-        .collect()
-        for m in ("agg", "window", "salted_window")
-    ]
-    assert outs[0] == outs[1] == outs[2]
-    assert len(outs[0]) > 0
+    keys = ["conv_id", "turn_idx"]
+    agg = lww_reduce(df, keys).orderBy(*keys).collect()
+    winners, cleanup = _locator_winners(df, keys, ranges, str(tmp_path))
+    try:
+        loc = winners.select(*df.columns).orderBy(*keys).collect()
+    finally:
+        cleanup()
+    assert agg == loc
+    assert len(agg) > 0
 
 
 def test_widen_rules():

@@ -1,6 +1,7 @@
 """Round-3 apply-path mechanics: manifest-driven arithmetic offset
-bookkeeping, the bucket-fused single-shuffle LWW plan, the literal-predicate
-exactly-once filter, manifest backfill, and sidecar auto-flush.
+bookkeeping and its cross-check, the locator LWW kernel, the
+literal-predicate exactly-once filter, manifest backfill, and sidecar
+auto-flush.
 
 All end-state assertions go through the independent DuckDB oracle
 (``cdc/oracle.py``) — the same per-turn text-equality gate as the rest of the
@@ -26,28 +27,52 @@ from mimic_iv_etl_spark.cdc.changelog import (ChangeLogSpec,
 from mimic_iv_etl_spark.cdc.metrics import read_lineage, read_metrics
 from mimic_iv_etl_spark.cdc.oracle import duckdb_final_state
 from mimic_iv_etl_spark.cdc.replay import replay_log
-from mimic_iv_etl_spark.lake.merge import lww_bucket_fused, lww_reduce
-from mimic_iv_etl_spark.lake.table import BUCKET_COL, LakeTable
-from tests.util import TRANSCRIPT_SCHEMA, assert_final_state_equal
+from mimic_iv_etl_spark.lake.merge import lww_reduce
+from mimic_iv_etl_spark.lake.table import LakeTable
+from tests.util import (TRANSCRIPT_SCHEMA, assert_final_state_equal,
+                        manifest_spans)
+
+
+def _plans_since(spark, eid0: int) -> list[str]:
+    """Physical plans of the SQL executions after id ``eid0``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [e.physicalPlanDescription()
+            for e in (execs.apply(i) for i in range(execs.size()))
+            if e.executionId() > eid0]
+
+
+def _last_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())),
+               default=-1)
 
 
 @pytest.mark.parametrize("mode", ["auto", "agg"])
 def test_replay_uses_manifest_arithmetic_and_matches_oracle(
-        spark, small_log, tmp_path, mode):
+        spark, small_log, tmp_path, monkeypatch, mode):
     """The generator's manifest carries dense per-partition offset ranges, so
-    the whole replay does its exactly-once bookkeeping with no Observation
-    and no ranges aggregate — and still lands oracle-equal state with exact
-    per-partition lineage. 'auto' resolves to the packed-stamp locator
-    kernel, so this run IS the locator correctness gate (ties, late
-    arrivals, deletes, hot keys — all through the independent oracle)."""
+    the whole replay does its exactly-once bookkeeping by window arithmetic
+    — and still lands oracle-equal state with exact per-partition lineage.
+    'auto' is the default kernel choice, which resolves to the packed-stamp
+    locator kernel, so this run IS the locator correctness gate (ties, late
+    arrivals, deletes, hot keys — all through the independent oracle).
+    'agg' takes the locator out of reach, so every window runs the max_by
+    kernel with its ≤P-row aggregate checked against the declared ranges."""
     d, spec, manifest = small_log
     assert all(t["dense_offsets"] for t in manifest["tranches"])
+    if mode == "agg":
+        monkeypatch.setattr(apply_mod, "_locator_supported", lambda r: False)
     tp = str(tmp_path / f"t_manifest_{mode}")
     out = replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA,
-                     batch_offsets=700, n_buckets=8, dedup_mode=mode)
+                     batch_offsets=700, n_buckets=8)
     assert out["events_applied"] == spec.n_events
     tbl = LakeTable(spark, tp)
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
+    met = read_metrics(spark, tp).toPandas()
+    kernels = set(met.loc[~met["skipped"].astype(bool), "dedup_mode"])
+    assert kernels == {"locator" if mode == "auto" else "agg"}, kernels
 
     # lineage: arithmetic ranges must equal the data's actual ranges
     lin = read_lineage(spark, tbl.path).toPandas()
@@ -65,29 +90,54 @@ def test_replay_uses_manifest_arithmetic_and_matches_oracle(
     assert LakeTable(spark, tp).version == v
 
 
-def test_locator_kernel_is_hash_aggregate_and_matches_agg(spark, small_log):
-    """The packed-stamp winner-locator plan must be a HashAggregate (the
-    wide max_by struct kernel silently degrades to SortAggregate — the r2
-    scaling killer), and its locator set must equal the classic agg plan's
-    winners exactly."""
+def test_locator_kernel_is_hash_aggregate_and_matches_agg(spark, small_log,
+                                                          tmp_path):
+    """The packed-stamp winner-locator plan — with the manifest cross-check
+    counters in its aggregation — must be a HashAggregate (the wide max_by
+    struct kernel silently degrades to SortAggregate — the r2 scaling
+    killer), and its locator set must equal the classic agg plan's winners
+    exactly. Offset bookkeeping adds no side channel: no job of either
+    kernel's apply carries a CollectMetrics node."""
+    from mimic_iv_etl_spark.cdc.apply import _flag_outside
+    from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
     from mimic_iv_etl_spark.lake.merge import lww_winner_locators
 
-    d, _, _ = small_log
+    d, spec, manifest = small_log
     log = spark.read.parquet(*sorted(glob.glob(f"{d}/tranche-*")))
     cand = log.select(
         "conv_id", "turn_idx", "ts",
         (F.col("op") == "D").alias("_deleted"),
         F.col("offset").cast("long").alias("_lww_offset"),
         F.col("partition").cast("int").alias("_lww_partition"))
+    ranges = [{"partition": p, "min_offset": lo, "max_offset": hi}
+              for p, (lo, hi) in sorted(manifest_spans(manifest).items())]
 
-    locs = lww_winner_locators(cand, ["conv_id", "turn_idx"])
+    locs = lww_winner_locators(_flag_outside(cand, ranges),
+                               ["conv_id", "turn_idx"], "_outside")
     plan = locs._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
 
-    got = {(r["p"], r["o"]) for r in locs.collect()}
-    agg = lww_reduce(cand, ["conv_id", "turn_idx"], mode="agg")
+    rows = locs.collect()
+    assert sum(r["n"] for r in rows) == spec.n_events
+    assert sum(r["n_out"] for r in rows) == 0
+    got = {(r["p"], r["o"]) for r in rows}
+    agg = lww_reduce(cand, ["conv_id", "turn_idx"])
     want = {(r["_lww_partition"], r["_lww_offset"]) for r in agg.collect()}
     assert got == want
+
+    tranche = sorted(glob.glob(f"{d}/tranche-*"))[0]
+    t_meta = _manifest_tranches(d)[tranche]
+    manifest = {int(p): (int(r[0]), int(r[1]))
+                for p, r in t_meta["partition_offsets"].items()}
+    df = spark.read.parquet(tranche).drop("payload")
+    eid0 = _last_execution_id(spark)
+    for kernel, kw in (("locator", {"manifest_ranges": manifest}),
+                       ("agg", {"source_partitions": sorted(manifest)})):
+        tbl = LakeTable.create(spark, str(tmp_path / f"t_{kernel}"),
+                               TRANSCRIPT_SCHEMA, n_buckets=4)
+        assert apply_batch(tbl, df, batch_id=0, **kw)["dedup_mode"] == kernel
+    plans = _plans_since(spark, eid0)
+    assert plans and not [p for p in plans if "CollectMetrics" in p]
 
 
 def test_locator_resume_with_different_windows(spark, small_log, tmp_path):
@@ -112,7 +162,8 @@ def test_locator_resume_with_different_windows(spark, small_log, tmp_path):
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
     df = spark.read.parquet(tranche).drop("payload")
     stats1 = apply_batch(tbl, df.filter(F.col("offset") < 1100), batch_id=0,
-                         dedup_mode="locator", manifest_ranges=window0)
+                         manifest_ranges=window0)
+    assert stats1["dedup_mode"] == "locator"
     assert 0 < stats1["events_applied"] < spec.n_events
     # resume with 700-wide windows: window [700, 1400) straddles the
     # committed high-water marks — 700..1099 stale, 1100..1399 fresh
@@ -134,58 +185,6 @@ def test_locator_bit_budget_fallback():
         [{"partition": 70_000, "min_offset": 0, "max_offset": 10}])
     assert not _locator_supported(
         [{"partition": 0, "min_offset": 0, "max_offset": 1 << 37}])
-
-
-@pytest.mark.parametrize("salt", [1, 4])
-def test_bucket_fused_dedup_matches_oracle(spark, small_log, tmp_path, salt):
-    """dedup_mode='bucket': one wide shuffle, winners land pre-partitioned;
-    final state identical to the classic agg plan and the oracle; file count
-    stays bounded by the partition layout."""
-    d, spec, _ = small_log
-    tp = str(tmp_path / f"t_fused_{salt}")
-    out = replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA,
-                     batch_offsets=1_000, n_buckets=8,
-                     dedup_mode="bucket", write_salt=salt)
-    assert out["events_applied"] == spec.n_events
-    tbl = LakeTable(spark, tp)
-    assert_final_state_equal(tbl.read(), duckdb_final_state(d))
-    # every commit stages at most n_buckets × salt files (the pre-partitioned
-    # write must not explode into tasks × buckets tiny files)
-    history = sorted(tbl.history(), key=lambda s: s["version"])
-    for prev, cur in zip(history, history[1:]):
-        prev_paths = {e["path"]
-                      for e in tbl.at_version(prev["version"]).files}
-        added = [e for e in tbl.at_version(cur["version"]).files
-                 if e["path"] not in prev_paths]
-        assert len(added) <= 8 * salt
-
-
-def test_bucket_fused_is_single_exchange(spark):
-    """The fused plan's physical signature: exactly ONE Exchange between scan
-    and winners (vs two in the classic agg + bucket-repartition chain)."""
-    df = spark.range(1000).select(
-        F.concat(F.lit("c"), (F.col("id") % 37).cast("string")).alias("conv_id"),
-        (F.col("id") % 5).cast("int").alias("turn_idx"),
-        F.col("id").cast("timestamp").alias("ts"),
-        F.lit(False).alias("_deleted"),
-        F.col("id").alias("_lww_offset"),
-        F.lit(0).cast("int").alias("_lww_partition"),
-    ).withColumn(BUCKET_COL,
-                 F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int"))
-    fused = lww_bucket_fused(df, ["conv_id", "turn_idx"], BUCKET_COL, 8)
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
-
-    classic = lww_reduce(df.drop(BUCKET_COL), ["conv_id", "turn_idx"]) \
-        .withColumn(BUCKET_COL, F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")) \
-        .repartition(8, F.col(BUCKET_COL))
-    classic_plan = classic._jdf.queryExecution().executedPlan().toString()
-    assert classic_plan.count("Exchange") == 2, classic_plan
-
-    # and the two plans agree row-for-row
-    a = {tuple(r) for r in fused.drop(BUCKET_COL).collect()}
-    b = {tuple(r) for r in classic.drop(BUCKET_COL).collect()}
-    assert a == b
 
 
 def test_hwm_literal_predicate_equals_join_path(spark, small_log, tmp_path,
@@ -270,30 +269,6 @@ def test_replay_autoflushes_sidecars(spark, small_log, tmp_path):
     assert not os.path.exists(os.path.join(tp, "_metrics", "metrics.jsonl"))
 
 
-def test_scrub_version_guard(spark, small_log, tmp_path, monkeypatch):
-    """On a non-pinned Spark version the reflection scrub refuses (one loud
-    warning) and apply_batch's bookkeeping degrades to the separate-aggregate
-    path instead of poisoning the session via Observation."""
-    import pyspark
-
-    from mimic_iv_etl_spark import session as session_mod
-
-    monkeypatch.setattr(pyspark, "__version__", "4.2.0")
-    monkeypatch.setattr(session_mod, "_warned_scrub_version", False)
-    assert not session_mod.observation_scrub_available()
-    with pytest.warns(RuntimeWarning, match="validated against Spark"):
-        assert session_mod.scrub_observation_manager(spark) is False
-
-    d, spec, _ = small_log
-    log = spark.read.parquet(*sorted(glob.glob(f"{d}/tranche-*"))).drop("payload")
-    tbl = LakeTable.create(spark, str(tmp_path / "t_guard"), TRANSCRIPT_SCHEMA,
-                           n_buckets=4)
-    stats = apply_batch(tbl, log, batch_id=0,
-                        source_partitions=list(range(spec.n_partitions)))
-    assert stats["events_applied"] == spec.n_events
-    assert_final_state_equal(tbl.read(), duckdb_final_state(d))
-
-
 def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path):
     """VERDICT r03 item 5: a batch whose estimated locator driver transfer
     (winner locators + offset bitmap) exceeds the configured budget must
@@ -309,8 +284,8 @@ def test_locator_driver_budget_falls_back_to_agg(spark, small_log, tmp_path):
     df = spark.read.parquet(tranche).drop("payload")
     tp = str(tmp_path / "t_budget")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-    stats = apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
-                        manifest_ranges=ranges, locator_driver_budget=1024)
+    stats = apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges,
+                        locator_driver_budget=1024)
     assert stats["dedup_mode"] == "agg"
     assert stats["events_applied"] == spec.n_events
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
@@ -321,7 +296,7 @@ def test_locator_handles_more_than_64_partitions(spark, tmp_path):
     partitions must STAY on the locator fast path. The bitmap probe indexes
     broadcast (lo, hi, base) lookup arrays (constant-size expression) instead
     of chaining one when() per partition, so the old 64-partition codegen cap
-    is gone: with 80 partitions the apply must report dedup_mode='locator',
+    is gone: with 80 partitions the apply must report the locator kernel,
     the probe plan must be a broadcast with no per-partition CASE chain, and
     the final state must match the independent DuckDB oracle."""
     from mimic_iv_etl_spark.cdc.apply import (_locator_supported,
@@ -343,8 +318,7 @@ def test_locator_handles_more_than_64_partitions(spark, tmp_path):
     df = spark.read.parquet(tranche).drop("payload")
     tp = str(tmp_path / "t_manyparts")
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-    stats = apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
-                        manifest_ranges=ranges)
+    stats = apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
     assert stats["dedup_mode"] == "locator"
     assert stats["events_applied"] == spec.n_events
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
@@ -390,30 +364,24 @@ def test_manifest_validation_aborts_on_missing_offsets(spark, small_log,
     tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
     v0 = tbl.version
     with pytest.raises(RuntimeError, match="cross-check"):
-        apply_batch(tbl, df, batch_id=0, dedup_mode="locator",
-                    manifest_ranges=ranges)
+        apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges)
     tbl2 = LakeTable(spark, tp)
     assert tbl2.version == v0
     assert tbl2.applied_offsets == {}
     assert tbl2.read().count() == 0
-    # ADVICE r04: the abort path must not leak the locator staging dir, and
-    # the Observation scrub must have run (field nulled) — otherwise later
-    # jobs capturing the session die with NotSerializableException
+    # ADVICE r04: the abort path must not leak the locator staging dir
     assert not glob.glob(os.path.join(tp, "_staging", "lww-bitmap-*"))
-    jss = spark._jsparkSession  # noqa: SLF001
-    fld = jss.getClass().getDeclaredField("observationManager")
-    fld.setAccessible(True)
-    assert fld.get(jss) is None
 
 
 def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
     """ADVICE r04: beyond the 64-partition chained-predicate cap the
-    manifest validation must stay RANGE-exact (broadcast-joined lookup), not
+    manifest validation must stay RANGE-exact (broadcast-joined lookup on
+    the locator kernel, per-partition min/max on the agg kernel), not
     degrade to membership-plus-count. Corruption scenario: one in-range row
     missing and one out-of-range row added in the same declared partition —
-    n_total matches and partition membership passes, so a membership-only
-    check would commit a desynced applied_offsets map. Exercised in agg mode
-    (no driver-side winner cross-check to catch it instead)."""
+    the row count matches and partition membership passes, so a
+    membership-only check would commit a desynced applied_offsets map.
+    Exercised on both kernels (a zero driver budget forces agg)."""
     from mimic_iv_etl_spark.cdc.replay import _manifest_tranches
 
     d = str(tmp_path / "log_valcap")
@@ -432,14 +400,15 @@ def test_manifest_validation_range_exact_above_predicate_cap(spark, tmp_path):
     bad = (df.filter(~((F.col("partition") == p0) & (F.col("offset") == lo0)))
            .unionByName(moved))
     assert bad.count() == df.count()  # counts cancel — the trap
-    tp = str(tmp_path / "t_valcap")
-    tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
-    with pytest.raises(RuntimeError, match="cross-check"):
-        apply_batch(tbl, bad, batch_id=0, dedup_mode="agg",
-                    manifest_ranges=ranges)
-    tbl2 = LakeTable(spark, tp)
-    assert tbl2.applied_offsets == {}
-    assert tbl2.read().count() == 0
+    for budget in (512 << 20, 0):
+        tp = str(tmp_path / f"t_valcap_{budget}")
+        tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
+        with pytest.raises(RuntimeError, match="cross-check"):
+            apply_batch(tbl, bad, batch_id=0, manifest_ranges=ranges,
+                        locator_driver_budget=budget)
+        tbl2 = LakeTable(spark, tp)
+        assert tbl2.applied_offsets == {}
+        assert tbl2.read().count() == 0
 
 
 def test_manifest_validation_aborts_on_undeclared_partition(spark, small_log,
@@ -455,12 +424,13 @@ def test_manifest_validation_aborts_on_undeclared_partition(spark, small_log,
               for p, r in t_meta["partition_offsets"].items()}
     del ranges[max(ranges)]  # data still holds this partition's rows
     df = spark.read.parquet(tranche).drop("payload")
-    for mode in ("locator", "agg"):
+    # a zero driver budget takes the batch off the locator kernel
+    for mode, budget in (("locator", 512 << 20), ("agg", 0)):
         tp = str(tmp_path / f"t_val_undecl_{mode}")
         tbl = LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=4)
         with pytest.raises(RuntimeError, match="cross-check"):
-            apply_batch(tbl, df, batch_id=0, dedup_mode=mode,
-                        manifest_ranges=ranges)
+            apply_batch(tbl, df, batch_id=0, manifest_ranges=ranges,
+                        locator_driver_budget=budget)
         tbl2 = LakeTable(spark, tp)
         assert tbl2.applied_offsets == {}
         assert tbl2.read().count() == 0

@@ -7,11 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from mimic_iv_etl_spark.functions import (
-    decode_payload_json,
-    decode_payload_pandas,
-    normalize_text,
-)
+from mimic_iv_etl_spark.functions import decode_payload_json, normalize_text
 from mimic_iv_etl_spark.operators import dedup, labeling, multimodal, relational
 from mimic_iv_etl_spark.operators import similarity, text, windows
 from mimic_iv_etl_spark.plans import QueryBuilder
@@ -591,9 +587,6 @@ def test_multimodal_plumbing(spark):
 def test_payload_decoders_agree(spark, small_log):
     d, _, _ = small_log
     df = spark.read.parquet(f"{d}/tranche-0").limit(500)
-    jvm = decode_payload_json(df).select("offset", "partition", "text_decoded", "role_decoded")
-    pdu = decode_payload_pandas(df).select("offset", "partition", "text_decoded", "role_decoded")
-    assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, pdu.collect()))
     # decoded payload reproduces the raw columns
     chk = decode_payload_json(df).filter(
         ~(F.col("text_decoded").eqNullSafe(F.col("text")))

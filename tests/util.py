@@ -40,3 +40,14 @@ def assert_final_state_equal(engine_df, oracle_pdf: pd.DataFrame) -> None:
     want = normalize_pdf(oracle_pdf)
     assert list(got.columns) == list(want.columns), (got.columns, want.columns)
     pdt.assert_frame_equal(got, want, check_dtype=False)
+
+
+def manifest_spans(manifest: dict) -> dict[int, tuple[int, int]]:
+    """Whole-log dense ``(min, max)`` offset span per source partition, from
+    the generator's manifest (the union of the per-tranche ranges)."""
+    spans: dict[int, tuple[int, int]] = {}
+    for t in manifest["tranches"]:
+        for p, (lo, hi) in t["partition_offsets"].items():
+            old = spans.get(int(p), (lo, hi))
+            spans[int(p)] = (min(old[0], lo), max(old[1], hi))
+    return spans
