@@ -48,6 +48,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -100,10 +101,11 @@ def _flag_outside(candidates: DataFrame, ranges: list[dict]) -> DataFrame:
             for r in ranges)
         return candidates.withColumn(
             "_outside", F.expr(f"NOT coalesce({known}, false)"))
-    rng = candidates.sparkSession.createDataFrame(
-        [(int(r["partition"]), int(r["min_offset"]), int(r["max_offset"]))
-         for r in ranges],
-        "_lww_partition int, _rlo long, _rhi long")
+    rng = candidates.sparkSession.createDataFrame(pd.DataFrame({
+        "_lww_partition": [int(r["partition"]) for r in ranges],
+        "_rlo": [int(r["min_offset"]) for r in ranges],
+        "_rhi": [int(r["max_offset"]) for r in ranges],
+    }), "_lww_partition int, _rlo long, _rhi long")
     return (candidates.join(F.broadcast(rng), "_lww_partition", "left")
             .withColumn("_outside", F.expr(
                 "NOT coalesce(_lww_offset BETWEEN _rlo AND _rhi, false)"))
@@ -271,8 +273,12 @@ def _hwm_filter(batch_df: DataFrame, applied: dict[int, int]) -> DataFrame:
         # vanishing here
         return batch_df.filter(F.expr(
             f"({pred}) OR NOT ({members}) OR partition IS NULL"))
-    rows = [(int(p), int(o)) for p, o in applied.items()]
-    hwm = batch_df.sparkSession.createDataFrame(rows, "partition int, _hwm long")
+    # pandas over Arrow: a local relation, not a pickled RDD run through a
+    # Python worker
+    hwm = batch_df.sparkSession.createDataFrame(pd.DataFrame({
+        "partition": [int(p) for p in applied],
+        "_hwm": [int(o) for o in applied.values()],
+    }), "partition int, _hwm long")
     return (
         batch_df.join(F.broadcast(hwm), "partition", "left")
         .filter(F.col("offset") > F.coalesce(F.col("_hwm"), F.lit(-1)))

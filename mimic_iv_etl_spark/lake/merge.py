@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mimic_iv_etl_spark.lake.schema import quote
+
 DEFAULT_STAMP = ("ts", "_lww_offset", "_lww_partition")
 
 
@@ -39,18 +41,19 @@ def lww_reduce(
     """One winning row per ``key_cols``, chosen by lexicographic max of
     ``stamp_cols``. Column set/order of the input is preserved."""
     keys = list(key_cols)
-    stamp = F.struct(*[F.col(c) for c in stamp_cols])
     cols = df.columns
     # key columns ride as the grouping key; duplicating them inside the
     # max_by payload struct would re-shuffle the same bytes (~10% of the
     # wide-row width for the transcript key) for nothing
-    nonkey = [c for c in cols if c not in keys]
-    payload = F.struct(*[F.col(c) for c in nonkey])
+    payload = ", ".join(quote(c) for c in cols if c not in keys)
+    stamp = ", ".join(quote(c) for c in stamp_cols)
+    # SQL strings, not a Column per field: each Column is a Py4J round trip,
+    # and this runs on every merge-on-read lookup's plan build
     return (
         df.groupBy(*keys)
-        .agg(F.max_by(payload, stamp).alias("_w"))
-        .select(*[
-            F.col(c) if c in keys else F.col(f"_w.{c}").alias(c)
+        .agg(F.expr(f"max_by(struct({payload}), struct({stamp}))").alias("_w"))
+        .selectExpr(*[
+            quote(c) if c in keys else f"_w.{quote(c)} AS {quote(c)}"
             for c in cols
         ])
     )

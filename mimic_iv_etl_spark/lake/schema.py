@@ -61,3 +61,10 @@ def merge_schemas(table: T.StructType, batch: T.StructType) -> T.StructType:
 
 def schemas_equal(a: T.StructType, b: T.StructType) -> bool:
     return [(f.name, f.dataType) for f in a.fields] == [(f.name, f.dataType) for f in b.fields]
+
+
+def quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (spaces, dots and
+    backticks in column names survive ``selectExpr``/``F.expr``)."""
+    return "`" + name.replace("`", "``") + "`"
+

@@ -47,6 +47,7 @@ import shutil
 import time
 import uuid
 
+import pandas as pd
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
@@ -454,12 +455,13 @@ class LakeTable:
 
         At 100 TB this is the "fetch these conversations" path: bucket ids
         are computed with the SAME JVM hash expression as the write path
-        (one no-IO local job over the key list — never a table scan), the
-        snapshot's file list is pruned to those buckets at metadata level,
-        and the key IN-predicate is pushed BELOW the merge-on-read LWW
-        reduce into every parquet scan (sound because a key's winner depends
-        only on that key's rows) — so the scan cost is O(selected buckets)
-        files with row-group skipping, not O(table)."""
+        (folded over a local relation of the keys — no Spark job, never a
+        table scan), the snapshot's file list is pruned to
+        those buckets at metadata level, and the key IN-predicate is pushed
+        BELOW the merge-on-read LWW reduce into every parquet scan (sound
+        because a key's winner depends only on that key's rows) — so the
+        scan cost is O(selected buckets) files with row-group skipping, not
+        O(table)."""
         keys = list(keys)
         if not keys:
             return self.read(buckets=set(), internal=internal)
@@ -471,10 +473,11 @@ class LakeTable:
                 f"read_keys requires bucket_by ({col!r}) to be a key column "
                 f"({self.key_cols}); use read().filter() instead")
         ktype = {f.name: f.dataType for f in self.schema.fields}[col]
+        # a pandas frame goes over Arrow into a LocalRelation, over which the
+        # optimizer folds bucket_expr: the collect launches no Spark job
         kdf = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([T.StructField(col, ktype)]))
-        bids = {int(r["b"]) for r in
-                kdf.select(self.bucket_expr(col).alias("b")).distinct().collect()}
+            pd.DataFrame({col: keys}), T.StructType([T.StructField(col, ktype)]))
+        bids = {r[0] for r in kdf.select(self.bucket_expr(col)).collect()}
         return self.read(buckets=bids, internal=internal,
                          pre_filter=F.col(col).isin(keys))
 
@@ -515,24 +518,9 @@ class LakeTable:
                       if e["path"] not in parent_files
                       and e.get("kind", "base") == "delta"]
             snap = parent_snap
-        target = self.internal_schema
-        by_schema: dict[str, list[str]] = {}
-        for e in added:
-            by_schema.setdefault(str(e["schema_id"]), []).append(
-                os.path.join(self.path, e["path"]))
-        parts = []
-        for sid, paths in sorted(by_schema.items()):
-            written = _internal_schema(
-                T.StructType.fromJson(self.snapshot["schemas"][sid]))
-            parts.append(_align(self.spark.read.schema(written).parquet(*paths),
-                                target))
-        if parts:
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
+        out = self._assemble(added)
+        if added:
             out = lww_reduce(out, self.key_cols)
-        else:
-            out = self.spark.createDataFrame([], target)
         out = out.withColumn(
             "_change_type",
             F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")))
@@ -760,8 +748,26 @@ class LakeTable:
                 _commit_backoff(attempt)
                 self.refresh()  # load the winner, then replay onto it
                 self._rebase_guard(base_snap)
+                self._staged_guard(new_seg, new_entries)
                 manifests = rebase()
         raise AssertionError("unreachable")
+
+    def _staged_guard(self, new_seg: str | None,
+                      new_entries: list[dict]) -> None:
+        """A retry may only re-point files that still exist. A writer that
+        stalled past vacuum's grace window (its snapshot tmp vacuumed before
+        the link, or a lost race retried that late) has had its unreferenced
+        new segment and staged data files reclaimed by the same vacuum;
+        committing them would wedge every fresh reader → CommitConflict
+        (caller restages)."""
+        paths = [os.path.join(self.path, e["path"]) for e in new_entries]
+        if new_seg:
+            paths.append(os.path.join(self._meta_dir, new_seg))
+        gone = [p for p in paths if not os.path.exists(p)]
+        if gone:
+            raise CommitConflict(
+                f"{len(gone)} staged file(s) reclaimed by vacuum before the "
+                f"commit landed; restage against v{self.version}")
 
     def stage_delta(
         self,
@@ -1185,7 +1191,11 @@ def _has_tombstones(md) -> bool:
 
 def _align(df: DataFrame, target: T.StructType) -> DataFrame:
     """Project ``df`` (written schema) onto ``target``: add missing columns as
-    NULL, cast widened columns. Pure projection — no shuffle."""
+    NULL, cast widened columns. Pure projection — no shuffle. A file group
+    already in ``target`` (the common case) is returned as is: its projection
+    would be a no-op the optimizer removes, built one Py4J call per column."""
+    if schemas_equal(df.schema, target):
+        return df
     have = {f.name: f.dataType for f in df.schema.fields}
     cols = []
     for f in target.fields:
@@ -1202,6 +1212,13 @@ def _align(df: DataFrame, target: T.StructType) -> DataFrame:
 # torn create (crash between O_EXCL open and fsync) rather than a concurrent
 # writer mid-fsync; generous vs the ms-scale write of a KB-scale JSON
 _TORN_SNAPSHOT_GRACE_S = 60.0
+
+
+def _remove_if_present(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 
 
 def _write_snapshot(meta_dir: str, snap: dict) -> None:
@@ -1224,6 +1241,14 @@ def _write_snapshot(meta_dir: str, snap: dict) -> None:
         os.fsync(f.fileno())
     try:
         os.link(tmp, path)
+    except FileNotFoundError as e:
+        # vacuum aged out the tmp of this writer, stalled between fsync and
+        # link past the grace window: nothing committed. A data-free commit
+        # retries with a fresh tmp; one carrying staged files aborts in
+        # LakeTable._staged_guard if the same vacuum reclaimed them
+        raise CommitConflict(
+            f"snapshot v{snap['version']}: tmp file removed before its link "
+            "(vacuumed while the writer stalled)") from e
     except FileExistsError as e:
         try:
             with open(path) as f:
@@ -1239,9 +1264,9 @@ def _write_snapshot(meta_dir: str, snap: dict) -> None:
             except FileNotFoundError:
                 os.remove(tmp)
                 return _write_snapshot(meta_dir, snap)  # another writer healed it
-        os.remove(tmp)
+        _remove_if_present(tmp)
         raise CommitConflict(f"snapshot v{snap['version']} already exists") from e
-    os.remove(tmp)
+    _remove_if_present(tmp)  # vacuum may take it first; the commit stands
     tmp = os.path.join(meta_dir, f".hint.{uuid.uuid4().hex}")
     with open(tmp, "w") as f:
         f.write(str(snap["version"]))

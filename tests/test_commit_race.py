@@ -611,3 +611,62 @@ def test_link_commit_cannot_tear_and_orphan_tmp_is_vacuumed(spark, tmp_path):
     assert not glob.glob(os.path.join(meta, ".v*.tmp")), "orphan tmp kept"
     # no stray tmp files leak from successful commits either
     assert not glob.glob(os.path.join(meta, ".v*.tmp"))
+
+
+def test_vacuumed_commit_tmp_retries_or_aborts_cleanly(spark, tmp_path,
+                                                       monkeypatch):
+    """A committer stalled between the tmp's fsync and its link past
+    vacuum's grace window finds its tmp gone. That is a lost commit, not a
+    crash: ``_write_snapshot`` raises CommitConflict. A metadata commit
+    retries with a fresh tmp; an append aborts, because the same vacuum
+    reclaimed its new manifest segment and staged data files, and no
+    snapshot may reference them. The table stays readable by fresh handles
+    and takes the next append."""
+    import glob
+    import json
+    import os
+
+    path = str(tmp_path / "t_vacuumed_tmp")
+    tbl = _mk_table(spark, path)
+    meta = os.path.join(path, "metadata")
+    real_link = os.link
+    stalls = []
+
+    def stalled_link(src, dst, *args, **kwargs):
+        if not stalls and os.path.basename(src).startswith(".v"):
+            # the writer stalls here; a vacuum with an expired grace window
+            # reclaims its tmp before the link runs
+            stalls.append(LakeTable(spark, path).vacuum(grace_seconds=0.0))
+            assert not os.path.exists(src)
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "link", stalled_link)
+    v = tbl.version
+    tbl.commit_summary({"batch_id": 7})
+    assert len(stalls) == 1
+    assert tbl.version == v + 1
+    assert LakeTable(spark, path).summary["batch_id"] == 7
+
+    stalls.clear()
+    with pytest.raises(CommitConflict, match="reclaimed by vacuum"):
+        tbl.append_delta(_rows(spark, tbl, [
+            ("late", 0, "user", "x", None, TS, False, 100, 0)]))
+    assert len(stalls) == 1
+    assert stalls[0]["manifests"] == 1 and stalls[0]["data_files"] >= 1
+    monkeypatch.setattr(os, "link", real_link)
+    assert LakeTable(spark, path).version == v + 1
+    for fn in glob.glob(os.path.join(meta, "v*.json")):
+        with open(fn) as f:
+            snap = json.load(f)
+        for m in snap.get("manifests", []):
+            with open(os.path.join(meta, m)) as f:
+                entries = json.load(f)["entries"]
+            for e in entries:
+                assert os.path.exists(os.path.join(path, e["path"])), \
+                    f"{os.path.basename(fn)} references a reclaimed file"
+    fresh = LakeTable(spark, path)
+    assert ("late", 0) not in _state(fresh)
+    fresh.append_delta(_rows(spark, fresh, [
+        ("late", 0, "user", "y", None, TS, False, 101, 0)]))
+    assert _state(LakeTable(spark, path))[("late", 0)] == "y"
+    assert not glob.glob(os.path.join(meta, ".v*.tmp"))

@@ -236,35 +236,103 @@ def test_time_travel_history(spark, tmp_path):
     assert h[0]["summary"]["batch_id"] == 11
 
 
-def test_read_keys_point_lookup_prunes_and_pushes_down(spark, small_log, tmp_path):
+@pytest.mark.parametrize("bucket_by", ["conv_id", "turn_idx"])
+def test_read_keys_point_lookup_prunes_and_pushes_down(spark, small_log, tmp_path,
+                                                       bucket_by):
     """read_keys must (1) return exactly read().filter(isin) — including under
-    merge-on-read deltas, (2) scan only the selected keys' buckets' files,
-    and (3) push the key IN-predicate into the parquet scans below the LWW
-    reduce."""
+    merge-on-read deltas, with duplicate keys and keys sharing a bucket,
+    (2) scan exactly the files of the keys' buckets, as routed by a Spark
+    job over the table's own rows, and (3) push the key IN-predicate into
+    the parquet scans below the LWW reduce. Run over a string and an int
+    bucket column."""
+    import os
+
     from mimic_iv_etl_spark.cdc.replay import replay_log
     from tests.util import TRANSCRIPT_SCHEMA
 
     d, spec, _ = small_log
     tp = str(tmp_path / "t_ptlkp")
-    replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA, batch_offsets=2000,
-               n_buckets=8)
+    LakeTable.create(spark, tp, TRANSCRIPT_SCHEMA, n_buckets=8,
+                     bucket_by=bucket_by)
+    replay_log(spark, d, tp, batch_offsets=2000)
     tbl = LakeTable(spark, tp)
-    keys = [r["conv_id"] for r in
-            tbl.read().select("conv_id").distinct().limit(3).collect()]
+    assert any(e["kind"] == "delta" for e in tbl.files)
+
+    by_bucket: dict[int, list] = {}
+    for r in (tbl.read().select(bucket_by, tbl.bucket_expr().alias("b"))
+              .distinct().collect()):
+        by_bucket.setdefault(r["b"], []).append(r[bucket_by])
+    shared = next(b for b, ks in sorted(by_bucket.items()) if len(ks) >= 2)
+    other = next(b for b in sorted(by_bucket) if b != shared)
+    k1, k2 = sorted(by_bucket[shared])[:2]
+    k3 = min(by_bucket[other])
+    keys = [k1, k3, k2, k1, k3]  # duplicates, two keys in one bucket
 
     got = tbl.read_keys(keys)
-    want = tbl.read().filter(F.col("conv_id").isin(keys))
+    want = tbl.read().filter(F.col(bucket_by).isin(keys))
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
-    # bucket pruning: strictly fewer files than the full table holds
-    assert 0 < len(got.inputFiles()) < len(tbl.read().inputFiles())
+    # bucket pruning: exactly the files of the two buckets, strictly fewer
+    # than the full table holds
+    expect = {os.path.basename(e["path"]) for e in tbl.files
+              if e["bucket"] in {shared, other}}
+    scanned = {os.path.basename(f) for f in got.inputFiles()}
+    assert scanned == expect
+    assert len(scanned) < len(tbl.read().inputFiles())
 
     # predicate pushed into the scan (below the merge-on-read reduce)
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [In(conv_id" in plan, plan
+    assert f"PushedFilters: [In({bucket_by}" in plan, plan
 
     # empty key list → empty result, no files
     assert tbl.read_keys([]).count() == 0
+
+
+def test_read_keys_build_runs_no_spark_job(spark, small_log, tmp_path):
+    """Building a point lookup launches no Spark job: the bucket ids come
+    from the write path's hash expression folded over a local relation of
+    the keys. Only running the returned frame scans."""
+    from mimic_iv_etl_spark.cdc.replay import replay_log
+    from tests.util import TRANSCRIPT_SCHEMA
+
+    d, _, _ = small_log
+    tp = str(tmp_path / "t_nojob")
+    replay_log(spark, d, tp, schema=TRANSCRIPT_SCHEMA, batch_offsets=2000,
+               n_buckets=8)
+    tbl = LakeTable(spark, tp)
+    key = tbl.read().first()["conv_id"]
+    sc = spark.sparkContext
+
+    def last_job():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    before = last_job()
+    got = tbl.read_keys([key])
+    assert last_job() == before, "building read_keys ran a Spark job"
+    assert got.filter(F.col("conv_id") != key).count() == 0
+    assert last_job() > before
+
+
+def test_align_passes_current_groups_through_and_casts_evolved_ones(spark):
+    """_align adds missing columns as NULL and casts widened ones to the exact
+    target types (non-nullable array elements and quoted-looking names
+    included); a group already in the target schema is returned as is."""
+    from mimic_iv_etl_spark.lake.table import _align
+
+    target = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("a b", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("xs", T.ArrayType(T.IntegerType(), False)),
+        T.StructField("m", T.MapType(T.StringType(),
+                                     T.DecimalType(10, 2), False)),
+    ])
+    df = spark.range(1).selectExpr("CAST(id AS int) AS id")
+    out = _align(df, target)
+    assert [(f.name, f.dataType) for f in out.schema.fields] == \
+        [(f.name, f.dataType) for f in target.fields]
+    assert _align(out, target) is out
 
 
 def test_manifest_segments_make_commits_o_batch(spark, tmp_path):

@@ -48,6 +48,58 @@ def test_replay_evolved_log_with_compaction(spark, evolved_log, tmp_path):
     assert_final_state_equal(tbl.read(), duckdb_final_state(d))
 
 
+def test_evolved_column_name_needing_quotes(spark, evolved_log, tmp_path):
+    """The read and merge plans are assembled from SQL strings, so a column
+    name that is not a plain identifier (here the evolved ``tool_version``
+    renamed to ``tool version``) must survive replay with schema evolution,
+    merge-on-read reads, ``read_keys``, ``changes`` and ``compact``."""
+    import json
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    d, spec, _ = evolved_log
+    log = str(tmp_path / "log_quoted")
+    shutil.copytree(d, log)
+    with open(os.path.join(log, "manifest.json")) as f:
+        manifest = f.read()
+    with open(os.path.join(log, "manifest.json"), "w") as f:
+        f.write(manifest.replace(json.dumps(d)[1:-1], json.dumps(log)[1:-1]))
+    for fn in os.listdir(os.path.join(log, "tranche-1")):
+        if fn.endswith(".parquet"):
+            p = os.path.join(log, "tranche-1", fn)
+            t = pq.read_table(p)
+            pq.write_table(t.rename_columns(
+                ["tool version" if c == "tool_version" else c
+                 for c in t.column_names]), p)
+    want = duckdb_final_state(d).rename(columns={"tool_version": "tool version"})
+
+    tp = str(tmp_path / "t_quoted")
+    out = replay_log(spark, log, tp, schema=TRANSCRIPT_SCHEMA,
+                     batch_offsets=400, n_buckets=8)
+    assert out["events_applied"] == spec.n_events
+    tbl = LakeTable(spark, tp)
+    assert [f.name for f in tbl.schema.fields][-2:] == ["tool version",
+                                                        "latency_ms"]
+    assert any(e["kind"] == "delta" for e in tbl.files)
+    assert_final_state_equal(tbl.read(), want)
+
+    keys = sorted(want["conv_id"].unique())[:3]
+    sel = want[want["conv_id"].isin(keys)]
+    assert sel["tool version"].notna().any()
+    assert_final_state_equal(tbl.read_keys(keys), sel)
+
+    ups = tbl.changes(0).filter(F.col("_change_type") == "upsert")
+    assert_final_state_equal(ups.drop("_change_type"), want)
+
+    tbl.compact()
+    assert all(e["kind"] == "base" for e in tbl.files)
+    assert_final_state_equal(tbl.read(), want)
+    assert_final_state_equal(tbl.read_keys(keys), sel)
+
+
 def test_stream_log_end_to_end(spark, small_log, tmp_path):
     d, spec, _ = small_log
     tp = str(tmp_path / "t4")
